@@ -18,6 +18,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+# proven but unregistered query waves (each pinned by its own
+# tests/test_draft_rNN.py); the plans-registry guards accept these and no
+# other module outside registry._modules()
+STAGED_DRAFT_MODULES = ("draft_r16", "draft_r17", "draft_r18", "draft_r19", "draft_r20")
 
 
 @pytest.fixture(scope="session")

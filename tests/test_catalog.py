@@ -88,6 +88,39 @@ def test_registry_rotation_prioritizes_unverified(tmp_path, monkeypatch):
     assert set(ordered) == set(names)
 
 
+def test_no_new_unregistered_query_module():
+    """A plans module that defines a top-level QUERIES dict but is missing
+    from registry._modules() is never served, oracle-checked or linted —
+    beyond the staged draft waves, query modules must not pile up outside
+    the registry."""
+    import ast
+    import glob
+    import os
+
+    from pedri_analysis_spark.plans import registry
+    from tests.conftest import STAGED_DRAFT_MODULES
+
+    plans_dir = os.path.dirname(registry.__file__)
+    defining = set()
+    for path in glob.glob(os.path.join(plans_dir, "*.py")):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            if isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            elif isinstance(node, ast.Assign):
+                targets = node.targets
+            else:
+                continue
+            if any(isinstance(t, ast.Name) and t.id == "QUERIES" for t in targets):
+                defining.add(os.path.splitext(os.path.basename(path))[0])
+    registered = {m.__name__.rsplit(".", 1)[1] for m in registry._modules()}
+    unregistered = sorted(defining - registered - set(STAGED_DRAFT_MODULES))
+    assert not unregistered, (
+        f"query modules outside registry._modules(): {unregistered}"
+    )
+
+
 def test_source_manifest_covers_every_green_query():
     """Every query with a driver-green row must carry a SOURCE_MANIFEST
     stamp (bootstrap/stamp-latest keeps this true); an unstamped green

@@ -28,3 +28,30 @@ def test_catalog_plan_invariants(spark):
     assert set(committed) == set(report), (
         "PLANAUDIT.json stale — rerun tools/plan_lint.py"
     )
+
+
+def test_allowlists_name_known_queries():
+    """Every plan-lint allowlist entry must name a registered or staged
+    draft query; an entry for a deleted query is a stale exemption
+    waiting to be reused by an unrelated plan of the same name."""
+    import importlib
+
+    from pedri_analysis_spark.plans import registry
+    from tests.conftest import STAGED_DRAFT_MODULES
+    from tools.plan_lint import _BNLJ_ALLOWED, _EAGER_EXECUTING, _PYTHON_ALLOWED
+
+    known = set(registry.all_queries())
+    for mod in STAGED_DRAFT_MODULES:
+        known |= set(
+            importlib.import_module(f"pedri_analysis_spark.plans.{mod}").QUERIES
+        )
+    stale = {
+        label: sorted(allowed - known)
+        for label, allowed in (
+            ("_BNLJ_ALLOWED", _BNLJ_ALLOWED),
+            ("_PYTHON_ALLOWED", _PYTHON_ALLOWED),
+            ("_EAGER_EXECUTING", _EAGER_EXECUTING),
+        )
+        if allowed - known
+    }
+    assert not stale, f"allowlist entries naming no known query: {stale}"
